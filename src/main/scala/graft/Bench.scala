@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Benchmark main — driver contract: ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -8,7 +9,9 @@ import org.apache.spark.sql.SparkSession
   * A warmup pass (flagship tables + one tiny query) runs before timing so
   * JVM/codegen/file-listing startup is not attributed to whichever query
   * happens to run first; queries then run in sorted-name order for
-  * run-to-run comparability.
+  * run-to-run comparability. A query that throws in either pass is named
+  * on stderr and listed under `failed` in BENCH_FULL.json; it has no
+  * time and is left out of `total`.
   */
 object Bench {
   /** 1-minute loadavg via the JVM's own OS bean (getloadavg(3)); -1.0 when
@@ -19,6 +22,40 @@ object Bench {
   private def loadAvg(): Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage
+
+  /** One timed run of a query: wall seconds to count its rows, or what
+    * it threw (never a time — a failed query must not read as a fast
+    * one). Either way the intra-query caches are dropped afterwards
+    * (dedup/similarity persist intermediates consumed multiple times
+    * within one plan), so storage-memory residue from query N can't
+    * distort query N+1's timing. */
+  private[graft] def timeQuery(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame): Either[Throwable, Double] = {
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, sfDir).count()
+      Right((System.nanoTime() - t0) / 1e9)
+    } catch { case NonFatal(e) => Left(e) }
+    finally {
+      graft.ops.ScratchCache.releaseAll()
+      spark.catalog.clearCache()
+    }
+  }
+
+  /** Per-query min over two passes, in pass-1 order, plus the queries
+    * that threw in either pass (with the first error) — those get no
+    * time at all. */
+  private[graft] def minOfPasses(
+      p1: Seq[(String, Either[Throwable, Double])],
+      p2: Seq[(String, Either[Throwable, Double])])
+      : (Seq[(String, Double)], Seq[(String, Throwable)]) = {
+    val second = p2.toMap
+    val merged = p1.map { case (name, r1) =>
+      name -> (for { a <- r1; b <- second(name) } yield math.min(a, b))
+    }
+    (merged.collect { case (name, Right(dt)) => name -> dt },
+     merged.collect { case (name, Left(e)) => name -> e })
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -74,23 +111,13 @@ object Bench {
     // iterating locally (the driver invokes with no args)
     val only: Option[Seq[String]] =
       if (args.nonEmpty) Some(args(0).split(",").toSeq) else None
-    def pass(): Seq[(String, Double)] =
+    def pass(): Seq[(String, Either[Throwable, Double])] =
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (name, _) => only.forall(_.exists(name.contains)) }
-        .map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // drop intra-query caches (dedup/similarity persist intermediates
-        // consumed multiple times within one plan) so storage-memory residue
-        // from query N can't distort query N+1's timing
-        graft.ops.ScratchCache.releaseAll()
-        spark.catalog.clearCache()
-        name -> dt
-      }
-    val p1 = pass().toMap
-    val results0 = pass().map { case (name, dt) =>
-      name -> math.min(dt, p1.getOrElse(name, dt))
+        .map { case (name, fn) => name -> timeQuery(spark, sfDir, fn) }
+    val (results0, failed) = minOfPasses(pass(), pass())
+    failed.foreach { case (name, e) =>
+      System.err.println(s"Bench: $name failed: $e")
     }
     // flagship raster pipeline (E2→E3→E1, ~110 synthetic 1° tiles,
     // 24 16-day periods × 7 bands): tracked like the queries so the
@@ -142,8 +169,9 @@ object Bench {
     }
     val loadJson =
       s""""load_start":${fmt(loadStart)},"load_end":${fmt(loadEnd)},"cpu_sec":${fmt(cpuSec)}"""
+    val failedJson = failed.map("\"" + _._1 + "\"").mkString("[", ",", "]")
     val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},$loadJson,"queries":${jsonMap(results)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},$loadJson,"queries":${jsonMap(results)},"failed":$failedJson,"sf":"$sfDir"}"""
     // CWD-relative (or env-overridden) so any checkout gets the file; a
     // failed write is logged, not swallowed — the stdout line advertises it
     val fullPath = java.nio.file.Paths.get(

@@ -38,14 +38,17 @@ object Aggregates {
 
   /** A4: exact median through the engine's holistic MedianAggregator (not
     * Spark's builtin percentile) — numpy/DuckDB semantics: mean of the two
-    * middle values on even counts. */
+    * middle values on even counts. Rounded with `roundp`, the twin's
+    * round(x*100)/100 on the binary double: Spark's round(x, 2) rounds
+    * the double's decimal form, so a median of 1.005 (binary
+    * 1.00499999...) would give 1.01 where DuckDB gives 1.0. */
   def q20MaskedMedian(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     lineitem(s, d)
       .groupBy($"l_returnflag", $"l_linestatus")
       .agg(
-        round(TemporalReduce.medianUdaf($"l_quantity"), 2).as("median_qty"),
-        round(TemporalReduce.medianUdaf(
+        roundp(TemporalReduce.medianUdaf($"l_quantity"), 2).as("median_qty"),
+        roundp(TemporalReduce.medianUdaf(
           when($"l_discount" > 0.02, $"l_extendedprice")), 2).as("median_masked_price"),
         count(lit(1)).as("n"))
       .orderBy($"l_returnflag", $"l_linestatus")

@@ -57,6 +57,55 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(clone, cds.queryExecution.logical)
   }
 
+  /** Run `ds`'s plan ONCE, keep its rows persisted at `level`, and return
+    * a frame whose logical plan is a `LogicalRDD` leaf over those rows,
+    * together with the persisted RDD (the caller owns its release).
+    *
+    * This is `Dataset.localCheckpoint` minus the checkpoint: the rows run
+    * as one SQL execution (so listeners and `Observation`s on `ds` see it
+    * like any action), and the leaf takes its statistics and constraints
+    * from `ds` as `LogicalRDD.fromDataset` does. Its output partitioning
+    * and ordering come from the plan that actually ran — under AQE the
+    * final adaptive plan, which `fromDataset` cannot see (it reports
+    * UnknownPartitioning there), so a dst-partitioned edge table stays
+    * dst-partitioned. Unlike a local checkpoint the RDD keeps its
+    * lineage, so a leaf read after its rows were unpersisted recomputes
+    * instead of failing. Plans built on the leaf print one
+    * `Scan ExistingRDD` line where a persisted frame would print its
+    * whole cached plan. */
+  def materializedLeaf(ds: org.apache.spark.sql.Dataset[_],
+                       level: org.apache.spark.storage.StorageLevel)
+      : (org.apache.spark.sql.DataFrame,
+         org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
+    import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection}
+    import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val cds = ds.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val qe = cds.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("materializedLeaf")) {
+      val r = qe.executedPlan.execute().map(_.copy()).persist(level)
+      r.count()
+      r
+    }
+    val ran = qe.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan // final once executed
+      case p => p
+    }
+    // as fromDataset: one leaf of a PartitioningCollection, which would
+    // otherwise grow with every inner join stacked on the leaf
+    @scala.annotation.tailrec
+    def firstLeaf(p: Partitioning): Partitioning = p match {
+      case PartitioningCollection(ps) => firstLeaf(ps.head)
+      case other => other
+    }
+    val (stats, constraints) =
+      LogicalRDD.rewriteStatsAndConstraints(cds.logicalPlan, qe.optimizedPlan)
+    val leaf = LogicalRDD(cds.logicalPlan.output, rows,
+      firstLeaf(ran.outputPartitioning), ran.outputOrdering, cds.isStreaming)(
+      cds.sparkSession, stats, constraints)
+    (org.apache.spark.sql.classic.Dataset.ofRows(cds.sparkSession, leaf), rows)
+  }
+
   /** Full ColumnNode→Expression conversion — required when a Column built
     * from the public functions API (zip_with/aggregate/... compositions)
     * must become a catalyst tree OUTSIDE a Dataset operation, e.g. inside

@@ -587,11 +587,58 @@ class DedupSpec extends AnyFunSuite with SparkSpecBase {
     // alone (needs 62); the jump must carry it, and labels must still be
     // exact min-ids.
     val chain = (1L to 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    graft.ops.ScratchCache.releaseAll()
+    val before = persistedRdds()
     val got = Dedup.connectedComponentsWithBounds(chain, "id_a", "id_b",
         maxIter = 25, labelBroadcastMax = 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.length == 64 && got.forall(_._2 == 1L))
+    // the dst-partitioned edge leaf (FanOut.byKey over the first edge
+    // leaf) and every label generation are released with the sweep
     graft.ops.ScratchCache.releaseAll()
+    assert(persistedRdds() -- before == Set.empty)
+  }
+
+  private def persistedRdds(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("ScratchCache.leaf: one-line leaf plan, kept partitioning; released rows recompute") {
+    import graft.ops.{FanOut, ScratchCache}
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    ScratchCache.releaseAll()
+    val before = persistedRdds()
+    val src = spark.range(0, 200).select(($"id" % 7).as("k"), $"id")
+    val keyed = ScratchCache.leaf(FanOut.byKey(src, $"k"))
+    val leaf = keyed.queryExecution.analyzed match {
+      case r: LogicalRDD => r
+      case other => fail(s"not a leaf: $other")
+    }
+    // the partitioning the leaf reports must describe its rows exactly,
+    // or a join reusing it would pair the wrong partitions
+    leaf.outputPartitioning match {
+      case h: HashPartitioning =>
+        assert(h.numPartitions == leaf.rdd.getNumPartitions)
+      case other => fail(s"hash partitioning dropped: $other")
+    }
+    val rows = keyed.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(rows.size == 200)
+    assert(persistedRdds().size == before.size + 1)
+    ScratchCache.releaseAll()
+    assert(persistedRdds() == before)
+    assert(keyed.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == rows)
+    ScratchCache.releaseAll()
+  }
+
+  test("q128: nothing CC created stays persisted after ScratchCache.releaseAll") {
+    graft.ops.ScratchCache.releaseAll()
+    spark.catalog.clearCache()
+    val before = persistedRdds()
+    val df = graft.queries.DedupQueries.q128ClusterSizes(spark, sfSmoke)
+    assert(df.collect().nonEmpty)
+    assert(persistedRdds().size > before.size) // the sweep has work to do
+    graft.ops.ScratchCache.releaseAll()
+    assert(persistedRdds() -- before == Set.empty)
   }
 
   test("blockLocalComponents == iterative connectedComponents on blocked graphs") {

@@ -522,4 +522,28 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpecBase {
       assert(!plan.contains("CartesianProduct"), s"$name: $plan")
     }
   }
+
+  test("CC consumers (q51/q109/q115/q128/q133): the pair generator's plan is not re-embedded under CC's rounds") {
+    // connectedComponents reads its edges through a lineage-cut leaf; with
+    // the edges persisted over the pair plan instead, every round and
+    // every consumer embeds nested InMemoryRelations that each print
+    // their cached plan, re-rendered at every SQL execution start and AQE
+    // re-plan. Measured here: 175-355 InMemoryRelations and 3,377-6,808
+    // plan lines per query with persisted edges; 5-15 and 105-264 with
+    // the leaf; and q51 at 85 and 1,702 with edges neither cut nor
+    // persisted (the pair plan alone is 8 and 156).
+    import graft.queries.DedupQueries._
+    for ((name, q) <- Seq[(String, (org.apache.spark.sql.SparkSession, String) => DataFrame)](
+        "q51" -> q51DedupGroups, "q109" -> q109LeakageSplit,
+        "q115" -> q115DedupSurvivors, "q128" -> q128ClusterSizes,
+        "q133" -> q133DedupPolicyImpact)) {
+      val plan = planStr(q(spark, sfSmoke))
+      val relations = "InMemoryRelation".r.findAllIn(plan).size
+      val lines = plan.count(_ == '\n')
+      graft.ops.ScratchCache.releaseAll()
+      spark.catalog.clearCache()
+      assert(relations <= 20 && lines <= 500,
+        s"$name: $relations InMemoryRelations, $lines plan lines\n$plan")
+    }
+  }
 }
