@@ -23,6 +23,13 @@ object Bench {
     java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage
 
+  /** The scale-factor directory and core count the harness mains run
+    * with: `SPARK_GRAFT_SF_DIR` (default sf0.1) and `SPARK_GRAFT_CPUS`
+    * (default 4). */
+  private[graft] def envSfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  private[graft] def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
   /** One timed run of a query: wall seconds to count its rows, or what
     * it threw (never a time — a failed query must not read as a fast
     * one). Either way the intra-query caches are dropped afterwards
@@ -58,25 +65,9 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = envSfDir
     val loadStart = loadAvg()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // local[N] shuffles move through the page cache, not a network:
-      // lz4 framing is pure CPU overhead at this scale (a real cluster
-      // would keep compression on — these two are bench-host tuning, not
-      // engine semantics)
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    val spark = GraftSession.local(envCpus)
 
     // warmup: touch every table (schema + listing caches) and run one
     // small query end-to-end (codegen + shuffle machinery)
@@ -109,11 +100,9 @@ object Bench {
     // between queries, so pass 2 is not a warm-cache replay).
     // optional arg: comma-separated name substrings — bench a subset while
     // iterating locally (the driver invokes with no args)
-    val only: Option[Seq[String]] =
-      if (args.nonEmpty) Some(args(0).split(",").toSeq) else None
+    val only = args.headOption
     def pass(): Seq[(String, Either[Throwable, Double])] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.forall(_.exists(name.contains)) }
+      SparkEntry.selected(only)
         .map { case (name, fn) => name -> timeQuery(spark, sfDir, fn) }
     val (results0, failed) = minOfPasses(pass(), pass())
     failed.foreach { case (name, e) =>
@@ -125,7 +114,7 @@ object Bench {
     // run; min of two, like the query passes. Skipped under a subset
     // filter unless asked for by name.
     val results =
-      if (!only.forall(_.exists("mosaic_pipeline".contains(_)))) results0
+      if (!SparkEntry.selects(only, "mosaic_pipeline_110tiles")) results0
       else {
         def mosaicRun(): Double = {
           val store = java.nio.file.Files

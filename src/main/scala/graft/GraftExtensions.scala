@@ -11,7 +11,7 @@ import graft.functions._
   * session so they are usable from SQL as well as the Column API:
   *
   * {{{
-  *   SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+  *   val spark = builder.withExtensions(new GraftExtensions).getOrCreate()
   *   spark.sql("SELECT graft_dot(a.embedding, b.embedding) ...")
   * }}}
   *
@@ -106,7 +106,7 @@ object GraftExtensions {
       comp(a)(c => GeodesicFunctions.geodesicMeters(c(0), c(1), c(2), c(3)))),
   )
 
-  /** Imperative registration for an existing session (tests, Verify).
+  /** Imperative registration for an existing session (`GraftSession`).
     * Also registers the sketch AGGREGATES (`spark.udf.register` is the
     * UDAF path — SparkSessionExtensions.injectFunction only takes scalar
     * expression builders): `graft_hll_distinct(hash64)` and

@@ -47,6 +47,16 @@ object SparkEntry {
     graft.queries.InferenceQueries.queries ++
     graft.queries.PrivacyQueries.queries
 
+  /** The harness mains' subset filter: `name` is selected when it contains
+    * one of the comma-separated substrings in `filter` (no filter selects
+    * everything). Substrings, so `q51` also matches `q151_...`. */
+  def selects(filter: Option[String], name: String): Boolean =
+    filter.forall(_.split(",").exists(name.contains))
+
+  /** The `queries` entries `filter` selects, in name order. */
+  def selected(filter: Option[String]): Seq[(String, (SparkSession, String) => DataFrame)] =
+    queries.toSeq.sortBy(_._1).filter { case (name, _) => selects(filter, name) }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -1,32 +1,23 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `.explain("formatted")` for the named queries to
   * <outDir>/<query>_<tag>.txt — the plan-evidence artifacts the
   * optimization rounds commit under plans/rNN/. Usage:
   * `runMain graft.tools.DumpPlans <outDir> <tag> <name1> <name2> ...`
-  * (a name substring selects every matching query). Eager operators
-  * (e.g. connected components' iterative loop) run during construction;
-  * the dump is the FINAL consumer plan, which is what the declared query
-  * returns. */
+  * (a name substring selects every matching query), on the bench's
+  * session and data (`SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_CPUS`). Eager
+  * operators (e.g. connected components' iterative loop) run during
+  * construction; the dump is the FINAL consumer plan, which is what the
+  * declared query returns. */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
-    val sf = sys.env.getOrElse("PROF_SF", "/root/testdata/sf0.1")
-    val outDir = args(0)
-    val tag = args(1)
-    val names = args.drop(2)
+    require(args.length > 2,
+      "usage: graft.tools.DumpPlans <outDir> <tag> <name-substring>...")
+    val (outDir, tag) = (args(0), args(1))
+    val sf = graft.Bench.envSfDir
     new java.io.File(outDir).mkdirs()
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftExtensions.register(spark)
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => names.exists(n.contains) }
+    val spark = graft.GraftSession.local(graft.Bench.envCpus)
+    graft.SparkEntry.selected(Some(args.drop(2).mkString(",")))
       .foreach { case (n, fn) =>
         try {
           val df = fn(spark, sf)

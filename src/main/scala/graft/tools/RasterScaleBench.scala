@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Raster-path scale bench (VERDICT r13 item 4): the E2→E3→E1 mosaic
   * pipeline at 110 / 1,024 / 10,000 one-degree tiles — the §2 core
   * (S2/S3/S8/S9 + O8 region planning) measured beyond the single
@@ -14,16 +12,13 @@ import org.apache.spark.sql.SparkSession
   * E1 chunk write fan-out) and the write audit the verdict asked for —
   * regions planned (driver-side by design, a few thousand rows) vs
   * chunk files written by the distributed foreachPartition pass, to
-  * confirm the fan-out is carried by the Dataset, not a driver loop. */
+  * confirm the fan-out is carried by the Dataset, not a driver loop.
+  *
+  * Runs on the bench's session (`SPARK_GRAFT_CPUS` cores); the optional
+  * argument is a comma-separated subset of the sizes (`110,1024`). */
 object RasterScaleBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("raster-scale-bench").master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "16g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.Bench.envCpus)
 
     // ~square envelopes: 10×11=110 (the committed bench row), 32×32=1024,
     // 100×100=10000 tiles

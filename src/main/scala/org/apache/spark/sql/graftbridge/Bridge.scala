@@ -113,4 +113,9 @@ object Bridge {
     * that analysis never unwraps there; this converts eagerly. */
   def expressionTree(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** Blocks until every listener has seen every event posted so far (the
+    * listener bus is package-private to Spark). */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

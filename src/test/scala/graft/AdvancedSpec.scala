@@ -20,7 +20,6 @@ class AdvancedSpec extends AnyFunSuite with SparkSpecBase {
   }
 
   test("graft_dot is callable from SQL after extension registration") {
-    GraftExtensions.register(spark)
     Tables.embeddings(spark, sfSmoke).limit(5).createOrReplaceTempView("emb_t")
     val v = spark.sql(
       "SELECT graft_dot(embedding, embedding) AS d FROM emb_t ORDER BY vec_id")
@@ -29,7 +28,6 @@ class AdvancedSpec extends AnyFunSuite with SparkSpecBase {
   }
 
   test("graft_char_class_count / graft_redact_pii SQL forms match the Column API") {
-    GraftExtensions.register(spark)
     Seq((1L, "Дед abc 42, mail me: a.b@x.io or 01-234-567-8901"))
       .toDF("id", "text").createOrReplaceTempView("pii_t")
     val r = spark.sql(
@@ -43,7 +41,6 @@ class AdvancedSpec extends AnyFunSuite with SparkSpecBase {
   }
 
   test("the full native family is SQL-callable and matches the Column API") {
-    GraftExtensions.register(spark)
     Tables.documents(spark, sfSmoke).limit(20).createOrReplaceTempView("docs_t")
     Tables.embeddings(spark, sfSmoke).limit(20).createOrReplaceTempView("emb_t2")
     val sqlSide = spark.sql(

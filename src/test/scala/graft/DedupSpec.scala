@@ -229,7 +229,6 @@ class DedupSpec extends AnyFunSuite with SparkSpecBase {
     }
     assert(sawNonEmpty)
     // SQL registration round-trips
-    GraftExtensions.register(spark)
     val viaSql = spark.sql(
       "SELECT graft_shingle_hashes64('one two three four', 3)")
       .collect()(0).getSeq[Long](0)

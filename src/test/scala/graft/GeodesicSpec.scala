@@ -145,7 +145,6 @@ class GeodesicSpec extends AnyFunSuite with SparkSpecBase {
 
   test("graft_geodesic_m: SQL + Column paths equal the kernel; nulls propagate; antipodal cap converges") {
     import spark.implicits._
-    GraftExtensions.register(spark)
     val rows = Seq(
       (2.0, 48.0, -73.8, 40.6),
       (10.0, 0.0, 10.0, 90.0),

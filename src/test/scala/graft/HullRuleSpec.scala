@@ -11,8 +11,6 @@ import graft.plan.InferDisjunctionHulls
 class HullRuleSpec extends AnyFunSuite with SparkSpecBase {
   import org.apache.spark.sql.functions._
 
-  private lazy val registered: Unit = GraftExtensions.register(spark)
-
   private def li = Tables.lineitem(spark, sfSmoke)
   private def pt = Tables.part(spark, sfSmoke)
 
@@ -27,7 +25,6 @@ class HullRuleSpec extends AnyFunSuite with SparkSpecBase {
   }
 
   test("hulls are planted on both sides and reach the parquet scans") {
-    registered
     val df = q19Shape(li, pt)
     val optimized = df.queryExecution.optimizedPlan.toString
     // the lineitem-side hull (quantity bands) and part-side hull (brands)
@@ -41,7 +38,6 @@ class HullRuleSpec extends AnyFunSuite with SparkSpecBase {
   }
 
   test("row set is unchanged by the rule (manual-hull twin agrees)") {
-    registered
     import spark.implicits._
     val auto = q19Shape(li, pt).collect().head.getLong(0)
     // twin with the hulls written by hand (q202's original form) — the
@@ -53,7 +49,6 @@ class HullRuleSpec extends AnyFunSuite with SparkSpecBase {
   }
 
   test("fixpoint: applying the rule twice adds nothing") {
-    registered
     val plan = q19Shape(li, pt).queryExecution.analyzed
     val once = InferDisjunctionHulls(plan)
     val twice = InferDisjunctionHulls(once)
@@ -62,7 +57,6 @@ class HullRuleSpec extends AnyFunSuite with SparkSpecBase {
   }
 
   test("outer joins are left alone (IS NULL disjuncts would change null-extension)") {
-    registered
     import spark.implicits._
     val joined = li.join(pt, $"l_partkey" === $"p_partkey", "left_outer")
       .filter(($"p_brand" === "Brand#1" && $"l_quantity" <= 11.0) ||
@@ -78,7 +72,6 @@ class HullRuleSpec extends AnyFunSuite with SparkSpecBase {
   }
 
   test("a disjunct with no single-side conjunct implies no hull for that side") {
-    registered
     import spark.implicits._
     // second disjunct constrains only lineitem → no part-side hull
     val df = li.join(pt, $"l_partkey" === $"p_partkey")

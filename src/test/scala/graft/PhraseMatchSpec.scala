@@ -88,7 +88,6 @@ class PhraseMatchSpec extends AnyFunSuite with SparkSpecBase {
   }
 
   test("SQL surface: graft_phrase_matches with literal patterns") {
-    GraftExtensions.register(spark)
     Tables.documents(spark, "/root/testdata/sf0.001").createOrReplaceTempView("pm_docs")
     val n = spark.sql(
       "SELECT graft_phrase_matches(text, 'the', 'zzz-no-match') AS p FROM pm_docs")

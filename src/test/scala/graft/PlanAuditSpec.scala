@@ -308,7 +308,6 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpecBase {
   }
 
   test("q202 band join: the OR-of-ANDs hulls are INFERRED and pushed to both scans") {
-    GraftExtensions.register(spark) // activates InferDisjunctionHulls
     val df = Relational.q202BandJoin(spark, sfSmoke)
     val plan = planStr(df)
     // quantity-band hull on the lineitem scan, brand/size hull on part —

@@ -200,7 +200,6 @@ class SketchSpec extends AnyFunSuite with SparkSpecBase {
     assert(staged.length == fused.length)
     staged.zip(fused).foreach { case (a, b) => assert(a == b) }
     // SQL registration
-    GraftExtensions.register(spark)
     val viaSql = spark.sql("SELECT size(graft_char_windows('hello world!', 5)) AS n")
       .head().getInt(0)
     assert(viaSql == 8)
@@ -230,7 +229,6 @@ class SketchSpec extends AnyFunSuite with SparkSpecBase {
     assert(rebuilt.join(straight, Seq("text"))
       .filter(rebuilt("ws") =!= straight("ws")).isEmpty)
     // SQL registration
-    GraftExtensions.register(spark)
     val viaSql = spark.sql(
       "SELECT size(graft_char_window_hashes('hello world!', 5)) AS n")
       .head().getInt(0)
@@ -266,7 +264,6 @@ class SketchSpec extends AnyFunSuite with SparkSpecBase {
   }
 
   test("sketch aggregates are SQL-reachable via register()") {
-    GraftExtensions.register(spark)
     Tables.documents(spark, sfSmoke).createOrReplaceTempView("sk_docs")
     val hll = spark.sql(
       "SELECT graft_hll_distinct(xxhash64(text)) FROM sk_docs").head().getLong(0)

@@ -3,24 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for specs: one local session per suite (lazy). */
+/** Shared session for specs: the harness session (`GraftSession`) at four
+  * cores, so every spec runs with graft's SQL functions and optimizer rule
+  * registered, whichever spec runs first. */
 trait SparkSpecBase { self: AnyFunSuite =>
   lazy val spark: SparkSession = SparkSpecBase.session
   val sfSmoke = "/root/testdata/sf0.001"
 }
 
 object SparkSpecBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  val cpus = 4
+  lazy val session: SparkSession = GraftSession.local(cpus)
 }
